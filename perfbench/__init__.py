@@ -1,0 +1,1 @@
+"""kgforge benchmark package (entry point: perfbench/run.py)."""
